@@ -17,6 +17,11 @@ poll — at most one per minute.  That throttle is an artifact of its
 single-queue design (SURVEY §7.3.3); here the claim limit is
 `max_concurrent - in_flight`, preserving the backpressure *intent*
 (never over-claim) without the accidental 1/min ceiling.
+
+Materialization and commits follow the JobStore rule: each frame that
+must outlive a commit — the claimed batch (inside `state.claim_jobs`),
+the results, the crash-reset rows — is checkpointed once where it is
+produced, and every commit goes through `state.retry_commit`.
 """
 
 from __future__ import annotations
@@ -30,37 +35,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from encodesrv_spark.jobs import state
+from encodesrv_spark.jobs.pools import run_claimed_by_pool
 from encodesrv_spark.jobs.process import ProcessConfig, run_claimed_jobs
-from encodesrv_spark.jobs.state import CommitConflict, JobStore
-
-
-def _upsert_with_retry(
-    store: JobStore, updates: DataFrame, cols: list[str], max_retries: int = 5
-) -> None:
-    """Re-read-and-retry around a keyed upsert, same protocol as
-    `state.claim_jobs`: in the multi-server setup a racing commit
-    raises CommitConflict; without the retry the loser's terminal
-    Done/Error statuses are dropped and its jobs sit in
-    '<server> - Waiting' until the next startup_reset re-encodes them.
-    The upsert re-reads the current snapshot per attempt and publish
-    is idempotent, so retrying is safe.
-
-    `updates` is materialized once up front: its lazy plan may be
-    pinned to a snapshot version directory that the store's commit GC
-    (retain=2) deletes under exactly the races that trigger retries —
-    re-executing it on attempt 2 would then throw FileNotFoundError
-    instead of retrying.  localCheckpoint severs that lineage."""
-    updates = updates.localCheckpoint(eager=True)
-    try:
-        for _ in range(max_retries):
-            try:
-                store.upsert(updates, cols)
-                return
-            except CommitConflict:
-                continue
-        raise CommitConflict(f"upsert of {cols} lost {max_retries} races")
-    finally:
-        updates.unpersist()
+from encodesrv_spark.jobs.state import JobStore
 
 
 @dataclass
@@ -92,10 +69,12 @@ class Scheduler:
     def startup_reset(self) -> int:
         """ST5 crash recovery: my in-flight, non-Error rows →
         'Not Encoding'."""
-        updates = state.crash_reset_updates(self.jobs.read(), self.cfg.server)
+        updates = state.crash_reset_updates(
+            self.jobs.read(), self.cfg.server
+        ).localCheckpoint(eager=True)
         n = updates.count()
         if n:
-            _upsert_with_retry(self.jobs, updates, ["status"])
+            state.retry_commit(lambda: self.jobs.upsert(updates, ["status"]), "crash reset")
         return n
 
     def run_cycle(self, free_slots: int | None = None) -> DataFrame | None:
@@ -107,12 +86,9 @@ class Scheduler:
         # retried on conflict — safe even with multiple servers polling
         # the same store (ST3, SURVEY §7.3.1)
         candidates = state.claim_jobs(self.jobs, self.cfg.server, free_slots)
-        claimed = state.rewrite_mounts(candidates, self.cfg.mount_prefix)
-        # cache: claimed feeds the execution stage and the result joins
-        claimed = claimed.cache()
-        if claimed.count() == 0:
-            claimed.unpersist()
+        if candidates.isEmpty():
             return None
+        claimed = state.rewrite_mounts(candidates, self.cfg.mount_prefix)
 
         # J1: broadcast FK join to formats, NULL→'' coalesce done by
         # the argv layer; repartition so each job row is its own task
@@ -120,29 +96,24 @@ class Scheduler:
         with_fmt = claimed.join(
             F.broadcast(self.formats), claimed.format_id == self.formats.id_fmt
         ).repartition(max(free_slots, 1), "id")
-        if self.cfg.fair_pools:
-            from encodesrv_spark.jobs.pools import run_claimed_by_pool
+        run = run_claimed_by_pool if self.cfg.fair_pools else run_claimed_jobs
+        # the stages run exactly once, here; both publishes read this
+        results = run(with_fmt, self.process_cfg).localCheckpoint(eager=True)
 
-            results = run_claimed_by_pool(with_fmt, self.process_cfg).cache()
-        else:
-            results = run_claimed_jobs(with_fmt, self.process_cfg).cache()
-        results.count()  # materialize before the store mutates
-
-        # terminal status upserts (S8 sink), conflict-retried: another
-        # server's racing claim commit must not drop our Done/Error rows
-        _upsert_with_retry(
-            self.jobs,
-            results.select("id", F.col("final_status").alias("status")),
-            ["status"],
-        )
+        # terminal status upserts (S8 sink): another server's racing
+        # claim commit must not drop our Done/Error rows
+        terminal = results.select("id", F.col("final_status").alias("status"))
+        state.retry_commit(lambda: self.jobs.upsert(terminal, ["status"]), "terminal status")
         # video_files publish (J2/S11)
         if self.video_files is not None:
             vf_updates = state.video_files_updates(
                 results.filter(F.col("final_status").isin("Done", "Encoded"))
             )
-            if vf_updates.count():
-                _upsert_with_retry(self.video_files, vf_updates, ["is_enabled", "size"])
-        claimed.unpersist()
+            if not vf_updates.isEmpty():
+                state.retry_commit(
+                    lambda: self.video_files.upsert(vf_updates, ["is_enabled", "size"]),
+                    "video_files publish",
+                )
         return results
 
     def loop(self, max_cycles: int) -> None:

@@ -23,10 +23,14 @@ from __future__ import annotations
 
 import os
 import shutil
+from collections.abc import Callable
 from dataclasses import dataclass
+from typing import TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+T = TypeVar("T")
 
 # --- status vocabulary (compatibility surface) ------------------------------
 
@@ -79,6 +83,12 @@ class JobStore:
     _delta_log/N.json creation is the CAS); on a real deployment swap
     this class for Delta MERGE and the calling code is unchanged.
     Readers resolve _CURRENT and only ever see fully-written versions.
+
+    Callers follow one rule.  Commit GC deletes version ``v`` when
+    version ``v + retain`` commits, so a frame that must outlive a
+    commit is made lineage-free once, with ``localCheckpoint(eager=True)``,
+    where it is produced; and every :class:`CommitConflict` is retried
+    through :func:`retry_commit`.
     """
 
     def __init__(
@@ -178,17 +188,19 @@ class JobStore:
         return os.path.join(self.path, f"_COMMIT_{v:08d}")
 
     def _read_snapshot(self, v: int) -> DataFrame:
-        """Read a pinned version for an optimistic write.  If the dir
-        was already GC'd by a newer writer's retention sweep the
-        snapshot is stale beyond repair — surface that as
-        :class:`CommitConflict` (re-read and retry), not as a raw
-        path-not-found error that would abort the caller's retry
-        loop."""
-        d = self._version_dir(v)
+        """Read a pinned version for an optimistic write."""
+        return self._pinned(v, lambda: self.spark.read.parquet(self._version_dir(v)))
+
+    def _pinned(self, v: int, work: Callable[[], T]) -> T:
+        """Run `work`, which reads pinned version `v`.  If the dir was
+        GC'd by a newer writer's retention sweep the snapshot is stale
+        beyond repair — surface that as :class:`CommitConflict` (re-read
+        and retry), not as a raw path-not-found error that would abort
+        the caller's retry loop."""
         try:
-            return self.spark.read.parquet(d)
+            return work()
         except Exception as exc:
-            if not os.path.isdir(d):
+            if not os.path.isdir(self._version_dir(v)):
                 raise CommitConflict(
                     f"version {v} GC'd by a newer commit "
                     f"(current={self.current_version()})"
@@ -312,6 +324,18 @@ class JobStore:
         self._commit(joined.select(*out_cols), expected_version=expected_version)
 
 
+def retry_commit(attempt: Callable[[], T], what: str, max_retries: int = 5) -> T:
+    """The one re-read-and-retry loop: run `attempt`, which re-reads
+    the store, until it commits without :class:`CommitConflict` — a
+    racing server's commit costs a retry, never a dropped write."""
+    for _ in range(max_retries):
+        try:
+            return attempt()
+        except CommitConflict:
+            continue
+    raise CommitConflict(f"{what} lost {max_retries} races")
+
+
 def claim_jobs(
     store: JobStore, server: str, limit: int, max_retries: int = 5
 ) -> DataFrame:
@@ -320,28 +344,29 @@ def claim_jobs(
     claim them with a conditional update pinned to that snapshot's
     version.  A racing server triggers :class:`CommitConflict`; retry
     re-reads and claims only what is still free — two servers can
-    never own the same job.  Returns the claimed candidate rows."""
-    for _ in range(max_retries):
+    never own the same job.  Returns the claimed candidate rows,
+    checkpointed: they stay readable after commit GC removes the
+    snapshot they were picked from."""
+
+    def attempt() -> DataFrame:
         v0 = store.current_version()
-        snapshot = store._read_snapshot(v0)
-        candidates = poll_candidates(snapshot, limit)
+        candidates = store._pinned(
+            v0, lambda: poll_candidates(store.read_version(v0), limit).localCheckpoint(eager=True)
+        )
         # empty poll = drained queue: return without committing — an
         # empty upsert would still write a full new version (pure
         # write amplification, and under contention it steals the CAS
         # from a writer with real claims)
-        if not candidates.limit(1).count():
-            return candidates
-        try:
+        if not candidates.isEmpty():
             store.upsert(
                 claim_updates(candidates, server),
                 ["status"],
                 only_if=f"status = '{NOT_ENCODING}'",
                 expected_version=v0,
             )
-            return candidates
-        except CommitConflict:
-            continue
-    raise CommitConflict(f"claim by {server!r} lost {max_retries} races")
+        return candidates
+
+    return retry_commit(attempt, f"claim by {server!r}", max_retries)
 
 
 # --- declarative transitions -------------------------------------------------
@@ -412,30 +437,24 @@ def bot_status(jobs: DataFrame, server: str) -> BotStatus:
     """The bots' 'status' command (reference logs/bots/common.py:48-80):
     list of this server's running jobs (A3) + waiting count (A1/P5) +
     pluralized message (F5/F14). One two-branch aggregation."""
-    running = (
-        jobs.filter(
-            F.col("status").contains(server)
-            & ~F.col("status").contains("Error")
-            & (F.col("status") != NOT_ENCODING)
-        )
-        .select(F.col("source_file"))
-        .agg(
-            F.array_join(
-                F.array_sort(
-                    F.collect_list(F.element_at(F.split("source_file", "/"), -1))
-                ),
-                ", ",
-            ).alias("names")
-        )
-    )
-    waiting_cnt = jobs.filter(
-        (F.col("status") == NOT_ENCODING) | (F.col("status") == "Waiting")
-    ).count()
+    status = F.col("status")
+    running = status.contains(server) & ~status.contains("Error") & (status != NOT_ENCODING)
+    row = jobs.agg(
+        F.array_join(
+            F.array_sort(
+                F.collect_list(
+                    F.when(running, F.element_at(F.split("source_file", "/"), -1))
+                )
+            ),
+            ", ",
+        ).alias("names"),
+        F.count(F.when((status == NOT_ENCODING) | (status == "Waiting"), 1)).alias("waiting"),
+    ).collect()[0]
     # the relay module owns the template + the 'no jobs' idle fallback
     # (reference common.py:59-64) — ONE definition for logger and bots
     from encodesrv_spark.streaming.relays import form_status_message
 
-    names = running.collect()[0]["names"]
+    names, waiting_cnt = row["names"], row["waiting"]
     return BotStatus(
         currently_encoding=names or "no jobs",
         waiting_count=waiting_cnt,

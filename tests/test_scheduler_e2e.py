@@ -233,19 +233,22 @@ def test_streaming_poll_loop_runs_scheduler_cycles(spark, tmp_path):
     assert all(published.values()), published
 
 
-def test_terminal_upsert_retries_through_commit_conflict(spark, tmp_path):
+@pytest.mark.parametrize("flaky_store", ["jobs", "video_files"])
+def test_terminal_upsert_retries_through_commit_conflict(spark, tmp_path, flaky_store):
     """A racing server's commit between our claim and our terminal
     status write must NOT drop the Done/Error statuses: the scheduler
     re-reads and retries the upsert (same protocol as claim_jobs).
     Simulated by making the store's first upsert attempt lose the CAS
     race; without the retry loop the jobs would stay
-    '<server> - Waiting' and be re-encoded after the next reset."""
+    '<server> - Waiting' and be re-encoded after the next reset.  The
+    same loop covers the video_files publish."""
     from encodesrv_spark.jobs.state import CommitConflict
 
     jobs, vf = seed_stores(spark, tmp_path)
     sched = mk_scheduler(spark, tmp_path, jobs, vf)
+    store = jobs if flaky_store == "jobs" else vf
 
-    real_upsert = jobs.upsert
+    real_upsert = store.upsert
     fail_once = {"left": 2}
 
     def flaky_upsert(*args, **kwargs):
@@ -264,13 +267,13 @@ def test_terminal_upsert_retries_through_commit_conflict(spark, tmp_path):
 
         def claim_then_patch(*a, **k):
             out = orig(*a, **k)
-            jobs.upsert = flaky_upsert
+            store.upsert = flaky_upsert
             return out
 
         sched_mod.state.claim_jobs = claim_then_patch
         results = sched.run_cycle()
     finally:
-        jobs.upsert = real_upsert
+        store.upsert = real_upsert
         sched_mod.state.claim_jobs = orig
 
     assert results is not None
@@ -279,6 +282,8 @@ def test_terminal_upsert_retries_through_commit_conflict(spark, tmp_path):
     done = [s for s in statuses.values() if s in ("Done", "Encoded", "Error")]
     assert done, f"terminal statuses lost on conflict: {statuses}"
     assert not any(s == f"{SRV} - Waiting" for s in statuses.values())
+    published = {r["id"]: r["is_enabled"] for r in vf.read().collect()}
+    assert all(published[v] for v in (30, 40, 50)), published
 
 
 def test_two_real_writers_claim_exactly_once(spark, tmp_path):

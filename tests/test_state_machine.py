@@ -146,6 +146,25 @@ def test_optimistic_claim_conflict_and_retry(spark, tmp_path):
     assert final[1] == f"{SRV} - Waiting"
 
 
+def test_claimed_batch_outlives_snapshot_gc(spark, tmp_path):
+    """A claimed batch must stay readable after commit GC (default
+    retain) deletes the snapshot it was picked from: a racing server
+    commits twice between our claim and our read of the batch.  A
+    batch still pinned to that snapshot would fail to read after its
+    claim committed, stranding its jobs in '<server> - Waiting'."""
+    store = JobStore(spark, str(tmp_path / "jobs_gc"))
+    store.init(jobs_df(spark))
+    v0 = store.current_version()
+    ours = state.claim_jobs(store, SRV, 2)
+
+    theirs = state.claim_jobs(store, OTHER, 1)
+    store.upsert(theirs.select("id", F.lit("Done").alias("status")), ["status"])
+    assert store.current_version() == v0 + 3
+    assert v0 not in store.history()
+
+    assert sorted(r["id"] for r in ours.collect()) == [2, 7]
+
+
 def test_conditional_upsert_skips_nonmatching_rows(spark, tmp_path):
     """`only_if` gates the MERGE: an update targeting a row whose
     current status no longer matches leaves the row untouched."""
