@@ -35,10 +35,13 @@ import logging
 import threading
 from collections.abc import Callable
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from encodesrv_spark.jobs.process import ProcessConfig, run_claimed_jobs
+from encodesrv_spark.jobs.state import local_frame
 
 log = logging.getLogger(__name__)
 
@@ -131,10 +134,13 @@ def run_claimed_by_pool(
     ``(pool_name, sc.getLocalProperty("spark.scheduler.pool"))`` right
     before the action, witnessing the thread-local wiring.
 
-    The claimed frame is checkpointed once so the band filters re-scan
-    a materialized batch (≤ max_concurrent rows), not the claim MERGE
-    lineage; only bands that actually hold rows are dispatched, so the
-    common single-priority micro-batch costs one action, not three.
+    The batch (≤ max_concurrent rows) is collected once into a
+    :func:`~encodesrv_spark.jobs.state.local_frame`, so the active bands
+    and each band's rows come from the driver without a job; only bands
+    that hold rows are dispatched, so the common single-priority
+    micro-batch costs one action, not three.  Each band's action
+    collects its results, and all bands' rows return as ONE local
+    relation (a union of local frames would run a job per action on it).
 
     Failure semantics match the unpooled path: a band whose ACTION
     dies (infra failure — per-job ffmpeg errors surface as 'Error'
@@ -143,19 +149,16 @@ def run_claimed_by_pool(
     band's error is logged with its pool name before the first is
     re-raised, so a multi-band failure cannot hide its root cause."""
     spark = claimed_with_format.sparkSession
-    src = pool_column(claimed_with_format).localCheckpoint(eager=True)
+    src = local_frame(pool_column(claimed_with_format))
     sc = spark.sparkContext
 
-    # driver-side scalar over the ≤ max_concurrent-row checkpointed
-    # batch (documented .collect() convention): which bands have work?
-    active = {
-        r["__pool"] for r in src.select("__pool").distinct().collect()
-    }
+    # which bands have work? (driver rows of the local batch, no job)
+    active = {r["__pool"] for r in src.select("__pool").collect()}
     to_run = [pool for pool in POOLS if pool in active]
     if not to_run:  # empty claim batch: preserve unpooled schema/result
-        return run_claimed_jobs(src.drop("__pool"), cfg)
+        return local_frame(run_claimed_jobs(src.drop("__pool"), cfg))
 
-    results: dict[str, DataFrame] = {}
+    results: dict[str, tuple[StructType, pa.Table]] = {}
     errors: dict[str, BaseException] = {}
 
     def run_band(pool: str) -> None:
@@ -164,10 +167,9 @@ def run_claimed_by_pool(
             if probe is not None:
                 probe(pool, sc.getLocalProperty("spark.scheduler.pool"))
             band = src.filter(F.col("__pool") == pool).drop("__pool")
+            out = run_claimed_jobs(band, cfg)
             # the ACTION must run in this thread for the pool to apply
-            results[pool] = run_claimed_jobs(band, cfg).localCheckpoint(
-                eager=True
-            )
+            results[pool] = (out.schema, out.toArrow())
         except BaseException as exc:  # surfaced to the caller below
             errors[pool] = exc
         finally:
@@ -186,7 +188,6 @@ def run_claimed_by_pool(
             log.error("band %s failed: %s", pool, exc, exc_info=exc)
         raise next(iter(errors.values()))
 
-    out: DataFrame | None = None
-    for pool in to_run:
-        out = results[pool] if out is None else out.unionAll(results[pool])
-    return out
+    schema = results[to_run[0]][0]
+    rows = pa.concat_tables([results[pool][1] for pool in to_run])
+    return spark.createDataFrame(rows, schema)

@@ -281,8 +281,9 @@ def run_job_row(row: dict, cfg: ProcessConfig) -> dict:
 
 def run_claimed_jobs(claimed_with_format: DataFrame, cfg: ProcessConfig) -> DataFrame:
     """mapInPandas over claimed jobs (already broadcast-joined to their
-    format row). Repartition by id upstream to spread jobs across
-    executor cores (ST8 — Spark's scheduler replaces the thread pool)."""
+    format row).  The scheduler's claimed batch is a local relation with
+    one row per partition up to the core count, so each job runs in its
+    own task (ST8 — Spark's scheduler replaces the thread pool)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

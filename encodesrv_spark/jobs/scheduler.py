@@ -5,7 +5,7 @@ Maps the reference's daemon loop (encodesrv/__init__.py:54-141) onto
 Spark:
 
 * threads + queue.Queue      → Spark task scheduling over the claimed
-                               batch (repartition spreads jobs over cores)
+                               batch (a local relation: one job per task)
 * per-row UPDATE statements  → keyed upserts on the JobStore
 * 60 s sleep / 300 s backoff → injectable clock+sleeper (testable);
                                the Structured Streaming twin uses
@@ -18,10 +18,14 @@ single-queue design (SURVEY §7.3.3); here the claim limit is
 `max_concurrent - in_flight`, preserving the backpressure *intent*
 (never over-claim) without the accidental 1/min ceiling.
 
-Materialization and commits follow the JobStore rule: each frame that
-must outlive a commit — the claimed batch (inside `state.claim_jobs`),
-the results, the crash-reset rows — is checkpointed once where it is
-produced, and every commit goes through `state.retry_commit`.
+Materialization and commits follow the JobStore rule: each frame a
+cycle passes between commits is bounded by its `k` claimed rows, so the
+claimed batch (inside `state.claim_jobs`), the results and the
+crash-reset rows are collected once, where they are produced, into a
+driver-held local relation (`state.local_frame`); every commit goes
+through `state.retry_commit`.  The formats dimension is collected the
+same way once, when the `Scheduler` is built, so an edit to the formats
+table takes effect on restart.
 """
 
 from __future__ import annotations
@@ -57,6 +61,10 @@ class SchedulerConfig:
 
 @dataclass
 class Scheduler:
+    """The poll→claim→execute→publish loop over `jobs`.  `formats` is
+    read once, here: encode_formats is a static dimension (§1.2), so a
+    format edit takes effect when the scheduler restarts."""
+
     spark: SparkSession
     jobs: JobStore
     formats: DataFrame
@@ -66,13 +74,16 @@ class Scheduler:
     clock: Callable[[], datetime] = datetime.utcnow
     sleeper: Callable[[float], None] = time.sleep
 
+    def __post_init__(self) -> None:
+        self.formats = state.local_frame(self.formats)
+
     def startup_reset(self) -> int:
         """ST5 crash recovery: my in-flight, non-Error rows →
         'Not Encoding'."""
-        updates = state.crash_reset_updates(
-            self.jobs.read(), self.cfg.server
-        ).localCheckpoint(eager=True)
-        n = updates.count()
+        updates = state.local_frame(
+            state.crash_reset_updates(self.jobs.read(), self.cfg.server)
+        )
+        n = len(updates.collect())
         if n:
             state.retry_commit(lambda: self.jobs.upsert(updates, ["status"]), "crash reset")
         return n
@@ -91,14 +102,17 @@ class Scheduler:
         claimed = state.rewrite_mounts(candidates, self.cfg.mount_prefix)
 
         # J1: broadcast FK join to formats, NULL→'' coalesce done by
-        # the argv layer; repartition so each job row is its own task
-        # unit (the Spark analog of the reference's thread pool, ST8)
+        # the argv layer.  The local batch holds one row per partition
+        # up to the core count, so each job is its own task (the Spark
+        # analog of the reference's thread pool, ST8)
         with_fmt = claimed.join(
             F.broadcast(self.formats), claimed.format_id == self.formats.id_fmt
-        ).repartition(max(free_slots, 1), "id")
-        run = run_claimed_by_pool if self.cfg.fair_pools else run_claimed_jobs
+        )
         # the stages run exactly once, here; both publishes read this
-        results = run(with_fmt, self.process_cfg).localCheckpoint(eager=True)
+        if self.cfg.fair_pools:
+            results = run_claimed_by_pool(with_fmt, self.process_cfg)
+        else:
+            results = state.local_frame(run_claimed_jobs(with_fmt, self.process_cfg))
 
         # terminal status upserts (S8 sink): another server's racing
         # claim commit must not drop our Done/Error rows

@@ -17,6 +17,10 @@ module reproduces those semantics on Spark:
   283,304,309,330; encodesrv/__init__.py:78,112).
 * claim / crash-reset / publish transforms — declarative DataFrame
   rewrites of the reference's UPDATE statements.
+* :func:`local_frame` — the job layer's one materialization.  Every
+  frame a cycle passes between commits is bounded by its `k` claimed
+  rows, so it is collected once, where it is produced, into a
+  driver-held local relation.
 """
 
 from __future__ import annotations
@@ -29,6 +33,7 @@ from typing import TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 T = TypeVar("T")
 
@@ -84,11 +89,15 @@ class JobStore:
     this class for Delta MERGE and the calling code is unchanged.
     Readers resolve _CURRENT and only ever see fully-written versions.
 
+    The store remembers its schema — taken from :meth:`init`, or
+    inferred once from the first version this instance reads — and every
+    read passes it, so no read runs a schema-inference job.
+
     Callers follow one rule.  Commit GC deletes version ``v`` when
-    version ``v + retain`` commits, so a frame that must outlive a
-    commit is made lineage-free once, with ``localCheckpoint(eager=True)``,
-    where it is produced; and every :class:`CommitConflict` is retried
-    through :func:`retry_commit`.
+    version ``v + retain`` commits, and a cycle's frames are bounded by
+    its `k` claimed rows, so each such frame is collected once, where it
+    is produced, with :func:`local_frame`; and every
+    :class:`CommitConflict` is retried through :func:`retry_commit`.
     """
 
     def __init__(
@@ -100,6 +109,7 @@ class JobStore:
         # versions kept behind _CURRENT: >=2 covers concurrent readers;
         # raise it for time-travel (`read_version`) / audit windows
         self.retain = max(2, retain)
+        self._schema: StructType | None = None
 
     # -- version plumbing --
 
@@ -116,11 +126,17 @@ class JobStore:
     def _version_dir(self, v: int) -> str:
         return os.path.join(self.path, f"v_{v:08d}")
 
+    def _read(self, v: int) -> DataFrame:
+        d = self._version_dir(v)
+        if self._schema is None:  # a store this instance did not init
+            self._schema = self.spark.read.parquet(d).schema
+        return self.spark.read.schema(self._schema).parquet(d)
+
     def read(self) -> DataFrame:
         v = self.current_version()
         if v < 0:
             raise FileNotFoundError(f"JobStore at {self.path} not initialized")
-        return self.spark.read.parquet(self._version_dir(v))
+        return self._read(v)
 
     def read_version(self, v: int) -> DataFrame:
         """Time-travel: the table exactly as of commit `v` (must still
@@ -132,7 +148,7 @@ class JobStore:
                 f"version {v} not retained (retain={self.retain}, "
                 f"current={self.current_version()})"
             )
-        return self.spark.read.parquet(d)
+        return self._read(v)
 
     def history(self) -> list[int]:
         """Retained, readable version numbers, oldest first."""
@@ -189,7 +205,7 @@ class JobStore:
 
     def _read_snapshot(self, v: int) -> DataFrame:
         """Read a pinned version for an optimistic write."""
-        return self._pinned(v, lambda: self.spark.read.parquet(self._version_dir(v)))
+        return self._pinned(v, lambda: self._read(v))
 
     def _pinned(self, v: int, work: Callable[[], T]) -> T:
         """Run `work`, which reads pinned version `v`.  If the dir was
@@ -253,6 +269,7 @@ class JobStore:
     # -- operations --
 
     def init(self, df: DataFrame) -> None:
+        self._schema = df.schema
         self._commit(df)
 
     def append(
@@ -324,6 +341,15 @@ class JobStore:
         self._commit(joined.select(*out_cols), expected_version=expected_version)
 
 
+def local_frame(df: DataFrame) -> DataFrame:
+    """The one materialization for frames bounded by a cycle's `k`
+    rows: collect `df` once into a driver-held local relation.  Costs
+    one Spark job.  The result is a LocalTableScan with one partition
+    per row (up to defaultParallelism), `isEmpty` and `collect` on it
+    run no job, and it reads no file, so commit GC cannot break it."""
+    return df.sparkSession.createDataFrame(df.toArrow(), df.schema)
+
+
 def retry_commit(attempt: Callable[[], T], what: str, max_retries: int = 5) -> T:
     """The one re-read-and-retry loop: run `attempt`, which re-reads
     the store, until it commits without :class:`CommitConflict` — a
@@ -344,14 +370,15 @@ def claim_jobs(
     claim them with a conditional update pinned to that snapshot's
     version.  A racing server triggers :class:`CommitConflict`; retry
     re-reads and claims only what is still free — two servers can
-    never own the same job.  Returns the claimed candidate rows,
-    checkpointed: they stay readable after commit GC removes the
-    snapshot they were picked from."""
+    never own the same job.  Returns the claimed candidate rows as a
+    :func:`local_frame`, collected inside the pin on their snapshot: one
+    job per task downstream, `isEmpty` without a job, and readable after
+    commit GC removes the snapshot they were picked from."""
 
     def attempt() -> DataFrame:
         v0 = store.current_version()
         candidates = store._pinned(
-            v0, lambda: poll_candidates(store.read_version(v0), limit).localCheckpoint(eager=True)
+            v0, lambda: local_frame(poll_candidates(store.read_version(v0), limit))
         )
         # empty poll = drained queue: return without committing — an
         # empty upsert would still write a full new version (pure

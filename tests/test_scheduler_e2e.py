@@ -4,13 +4,14 @@ statuses and video_files effects asserted (SURVEY.md §5 plan item 3)."""
 
 from __future__ import annotations
 
+import os
 from datetime import datetime, timedelta
 
 import pytest
 
 from pyspark.sql import functions as F
 
-from encodesrv_spark.jobs.process import ProcessConfig
+from encodesrv_spark.jobs.process import ProcessConfig, stub_encode
 from encodesrv_spark.jobs.schema import (
     ENCODE_JOBS_SCHEMA,
     VIDEO_FILES_SCHEMA,
@@ -138,6 +139,49 @@ def test_full_cycle_processes_topk(spark, tmp_path):
     vfm = {r["id"]: r for r in vf.read().collect()}
     assert vfm[50]["is_enabled"] is True and vfm[50]["size"] > 0
     assert vfm[10]["is_enabled"] is False
+
+
+def test_claimed_jobs_run_one_per_task(spark, tmp_path):
+    """Each job of a claimed batch no larger than the core count runs
+    in its own task: jobs sharing a task would encode one after the
+    other while a core sits idle.  The encode stage records the
+    partition id of the task it runs in."""
+    k = min(4, spark.sparkContext.defaultParallelism)
+    rec = str(tmp_path / "tasks")
+    os.mkdir(rec)
+
+    def recording_encode(argv, cwd):
+        from pyspark import TaskContext
+
+        job_id = os.path.basename(cwd).split("--")[1]  # encode--<id>--*
+        with open(os.path.join(rec, job_id), "w") as f:
+            f.write(str(TaskContext.get().partitionId()))
+        stub_encode(argv, cwd)
+
+    jobs, vf = seed_stores(spark, tmp_path, n_jobs=k + 1)
+    sched = mk_scheduler(spark, tmp_path, jobs, vf, max_concurrent=k)
+    sched.process_cfg.encode = recording_encode
+    results = sched.run_cycle()
+    assert len(results.collect()) == k
+    parts = {}
+    for job_id in os.listdir(rec):
+        with open(os.path.join(rec, job_id)) as f:
+            parts[int(job_id)] = int(f.read())
+    assert len(parts) == k
+    assert len(set(parts.values())) == k, f"jobs shared a task: {parts}"
+
+
+def test_run_cycle_spark_job_budget(spark, tmp_path, spark_jobs):
+    """A cycle over a 4-job batch runs at most 10 Spark jobs: the top-k
+    collect, the stage run and its formats broadcast, and a broadcast
+    plus a write for each of the three commits.  The frames between
+    them are local relations, so their probes run no job."""
+    jobs, vf = seed_stores(spark, tmp_path)
+    sched = mk_scheduler(spark, tmp_path, jobs, vf, max_concurrent=4)
+    results, n = spark_jobs(sched.run_cycle)
+    assert n <= 10, f"{n} Spark jobs in one cycle"
+    rows, n = spark_jobs(results.collect)
+    assert len(rows) == 4 and n == 0
 
 
 def test_second_cycle_drains_remaining(spark, tmp_path):

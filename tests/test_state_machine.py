@@ -165,6 +165,36 @@ def test_claimed_batch_outlives_snapshot_gc(spark, tmp_path):
     assert sorted(r["id"] for r in ours.collect()) == [2, 7]
 
 
+def test_jobstore_reads_run_no_jobs_after_init(spark, tmp_path, spark_jobs):
+    """The store remembers the schema `init` gave it, so a read runs no
+    schema-inference job; another instance on the same path infers the
+    schema once, on its first read."""
+    store = JobStore(spark, str(tmp_path / "jobs"))
+    store.init(jobs_df(spark))
+    v = store.current_version()
+    for read in (store.read, lambda: store.read_version(v), lambda: store._read_snapshot(v)):
+        df, n = spark_jobs(read)
+        assert n == 0
+        assert sorted(r["id"] for r in df.collect()) == list(range(1, 8))
+
+    reopened = JobStore(spark, store.path)
+    assert spark_jobs(reopened.read)[1] <= 1
+    df, n = spark_jobs(reopened.read)
+    assert n == 0 and df.schema == store.read().schema
+
+
+def test_claimed_batch_answers_without_a_job(spark, tmp_path, spark_jobs):
+    """The claimed batch is a driver-held local relation: `isEmpty` and
+    `collect` on it run no Spark job."""
+    store = JobStore(spark, str(tmp_path / "jobs"))
+    store.init(jobs_df(spark))
+    claimed = state.claim_jobs(store, SRV, 2)
+    empty, n = spark_jobs(claimed.isEmpty)
+    assert not empty and n == 0
+    rows, n = spark_jobs(claimed.collect)
+    assert sorted(r["id"] for r in rows) == [2, 7] and n == 0
+
+
 def test_conditional_upsert_skips_nonmatching_rows(spark, tmp_path):
     """`only_if` gates the MERGE: an update targeting a row whose
     current status no longer matches leaves the row untouched."""
